@@ -36,6 +36,7 @@ def main():
     REGISTRY["q01_pricing_summary"].build(spark, sf_dir).count()
 
     per_query: dict[str, float] = {}
+    failed: dict[str, str] = {}
     total = 0.0
     # Streaming queries run LAST: a terminated streaming run leaves
     # state-store maintenance residue in the shared local JVM that
@@ -57,6 +58,10 @@ def main():
                 dt = time.time() - t0
             except Exception as e:  # pragma: no cover
                 print(f"bench error in {name}: {e}", file=sys.stderr)
+                # a failing query is left out of the total: name it in
+                # bench_detail.json so the smaller total is not silent
+                # (cut: Spark messages can carry whole JVM stack traces)
+                failed[name] = f"{type(e).__name__}: {e}"[:500]
                 continue
         per_query[name] = round(dt, 3)
         total += dt
@@ -74,6 +79,7 @@ def main():
         "value": round(total, 3),
         "unit": "sec",
         "queries": per_query,
+        "failed": failed,
         "sf": sf_val,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))

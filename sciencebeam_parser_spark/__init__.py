@@ -9,6 +9,7 @@ operators cannot express the semantics (model inference, XML build).
 
 Layout:
     session     — SparkSession factory tuned for local[] test / cluster use
+    pydaemon    — Python worker daemon entry (get_spark selects it)
     schemas     — explicit StructTypes for the core relations (tokens, labels,
                   graphics, entities) per SURVEY.md §1.2 / FIXTURES.md
     sources     — ingest: ALTO XML → token table, binary files, text

@@ -44,11 +44,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # long query suites compile thousands of whole-stage-codegen
-        # classes; the JVM default code cache (~240 MB) fills after ~100
-        # queries and the JIT silently degrades to interpreter for every
-        # later plan (measured: the same query 6.6s standalone vs 22s late
-        # in the bench suite). More cache + flushing keeps the JIT alive.
+        # Two caches hold compiled code. (1) HotSpot's code cache holds
+        # JIT-compiled machine code: long query suites compile thousands
+        # of whole-stage-codegen classes, the JVM default (~240 MB) fills
+        # after ~100 queries and the JIT silently degrades to interpreter
+        # for every later plan (measured: the same query 6.6s standalone
+        # vs 22s late in the bench suite), hence ReservedCodeCacheSize
+        # below. (2) Spark's generated-class cache (Janino) is
+        # spark.sql.codegen.cache.maxEntries, set after this block.
         .config(
             "spark.driver.extraJavaOptions",
             # append to (not clobber) any user/env-supplied options; note
@@ -59,6 +62,15 @@ def get_spark(
             ).strip(),
         )
         .config("spark.ui.enabled", "false")
+        # Spark's generated-class cache is LRU with 100 entries by default.
+        # A convert pass (q290 + q130) generates 179 distinct classes and
+        # asks for them in the same cyclic order each pass, so every lookup
+        # missed: 184-191 Janino compiles per warm pass, 0 at 2000 entries.
+        # One sf0.01 sweep of all 279 queries generates 3835 distinct
+        # classes and compiles 4007 at this size: only 172 are repeats.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # task start without re-parsing zip archive directories (pydaemon)
+        .config("spark.python.daemon.module", "sciencebeam_parser_spark.pydaemon")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
@@ -81,18 +93,3 @@ TABLES = (
     "embeddings",
 )
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver's synthetic parquet tables and register temp views.
-
-    Parquet scans here are the engine's primary source (SURVEY §2B scans);
-    Catalyst pushes filters/projections into these scans.
-    """
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs
